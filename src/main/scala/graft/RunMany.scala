@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: time a subset of registry queries in one Bench-shaped
   * session (same confs, same fixed alphabetical order, same `.count()`
   * action), printing per-query seconds for `reps` passes — the
@@ -19,18 +17,7 @@ object RunMany {
     val pats = pos(0).split(",").toSeq
     val sfDir = if (pos.length > 1) pos(1) else "/root/testdata/sf0.1"
     val reps = if (pos.length > 2) pos(2).toInt else 2
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local()
     // conf overrides: k=v pairs anywhere in the args (A/B loops)
     overrides.foreach { kv =>
       val Array(k, v) = kv.split("=", 2)

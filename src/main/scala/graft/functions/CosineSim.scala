@@ -95,37 +95,83 @@ case class CosineSim(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** Session registration for the engine's native expressions. */
+/** The engine's native SQL functions, defined once: name, the
+  * `ExpressionInfo` that `DESCRIBE FUNCTION` shows, and a builder that
+  * rejects a wrong argument count with a proper error instead of an
+  * `IndexOutOfBoundsException` from `children(1)`. Both the imperative
+  * [[register]] and the [[GraftExtensions]] injection iterate this
+  * table, so the two paths cannot drift. */
 object GraftFunctions {
+  type Builder = Seq[Expression] => Expression
+
+  /** One table row for a two-argument function. */
+  private def binary(cls: Class[_], name: String, usage: String,
+      group: String)(f: (Expression, Expression) => Expression)
+      : (FunctionIdentifier, ExpressionInfo, Builder) =
+    (FunctionIdentifier(name),
+      new ExpressionInfo(cls.getName, null, name, usage, "", "", "", group,
+        "", "", "built-in"),
+      children => {
+        require(children.length == 2,
+          s"$name takes 2 arguments, got ${children.length}")
+        f(children(0), children(1))
+      })
+
+  val functions: Seq[(FunctionIdentifier, ExpressionInfo, Builder)] = Seq(
+    binary(classOf[CosineSim], "graft_cosine",
+      "graft_cosine(a, b) - Returns the cosine similarity of two " +
+        "ARRAY<DOUBLE> columns over their common prefix.",
+      "array_funcs")(CosineSim(_, _)),
+    binary(classOf[QuantizedCos], "graft_qcos",
+      "graft_qcos(a, b) - Returns the cosine similarity of two " +
+        "ARRAY<BIGINT> int8-quantized vectors, accumulated exactly " +
+        "in integers.",
+      "array_funcs")(QuantizedCos(_, _)),
+    // the sorted-distinct PRECONDITION rides in the usage string: the
+    // type check can reject wrong TYPES, but unsorted/duplicated
+    // input silently undercounts, and DESCRIBE FUNCTION is the one
+    // place an ad-hoc SQL caller learns a contract the name alone
+    // can't carry
+    binary(classOf[SortedIntersectCount], "graft_ixcount",
+      "graft_ixcount(a, b) - Returns |a ∩ b| for two ARRAY<BIGINT> " +
+        "columns that are SORTED ascending and duplicate-free " +
+        "(e.g. built with sort_array(collect_list(...)) over distinct " +
+        "values). On unsorted or duplicated input the fused merge " +
+        "undercounts; under the contract it equals " +
+        "size(array_intersect(a, b)) exactly.",
+      "array_funcs")(SortedIntersectCount(_, _)),
+    // superset semantics in the contract string: the screen over
+    // these hashes may (very rarely) include a colliding non-equal
+    // window — exact callers re-screen candidates with a full hash
+    binary(classOf[RollingGramHash], "graft_roll64",
+      "graft_roll64(ws, L) - Karp-Rabin rolling 64-bit hash of every " +
+        "L-token window of an ARRAY<STRING> (null slots hash to a " +
+        "fixed sentinel; L a " +
+        "literal >= 2): returns ARRAY<BIGINT> with size(ws)-L+1 " +
+        "entries (empty when size(ws) < L). Equal windows always " +
+        "hash equal; unequal windows collide heuristically at " +
+        "~2^-64 on non-adversarial data - a polynomial hash mod " +
+        "2^64 is NOT a universal family (structured token-hash " +
+        "differences collide far more often), so a duplicate screen " +
+        "over these hashes is a SUPERSET of the true " +
+        "duplicated-window set and callers must ALWAYS re-screen " +
+        "candidates where exactness matters, e.g. with md5 over an " +
+        "unambiguous window encoding. NOTE on the md5 re-screen: " +
+        "md5(array_join(ws, ' ')) equality is JOIN-TEXT equality, " +
+        "coarser than this function's token-exact windows when " +
+        "tokens may contain the separator or nulls (array_join " +
+        "skips nulls and conflates token boundaries) - it is exact " +
+        "only for separator-free, null-free tokens (e.g. split on " +
+        "' ' with empties filtered); otherwise join with a " +
+        "length-prefixed or unit-separator encoding first.",
+      "hash_funcs")(RollingGramHash(_, _)))
+
   /** Idempotently register the native functions with the session
     * (imperative path for sessions built without extensions). */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_cosine",
-      (children: Seq[Expression]) => CosineSim(children(0), children(1)),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_qcos",
-      (children: Seq[Expression]) => QuantizedCos(children(0), children(1)),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_ixcount",
-      (children: Seq[Expression]) => {
-        // a proper arity error, not IndexOutOfBounds from children(1)
-        require(children.length == 2,
-          s"graft_ixcount takes 2 arguments, got ${children.length}")
-        SortedIntersectCount(children(0), children(1))
-      },
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_roll64",
-      (children: Seq[Expression]) => {
-        require(children.length == 2,
-          s"graft_roll64 takes 2 arguments, got ${children.length}")
-        RollingGramHash(children(0), children(1))
-      },
-      "built-in")
-  }
+  def register(spark: SparkSession): Unit =
+    functions.foreach { case (name, info, builder) =>
+      spark.sessionState.functionRegistry.registerFunction(name, info, builder)
+    }
 }
 
 /** The canonical injection point: set
@@ -137,62 +183,7 @@ class GraftExtensions
     extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
   override def apply(
       ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("graft_cosine"),
-      new ExpressionInfo(classOf[CosineSim].getName, "graft_cosine"),
-      (children: Seq[Expression]) => CosineSim(children(0), children(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_qcos"),
-      new ExpressionInfo(classOf[QuantizedCos].getName, "graft_qcos"),
-      (children: Seq[Expression]) => QuantizedCos(children(0), children(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_ixcount"),
-      // the sorted-distinct PRECONDITION rides in the usage string: the
-      // type check can reject wrong TYPES, but unsorted/duplicated
-      // input silently undercounts, and DESCRIBE FUNCTION is the one
-      // place an ad-hoc SQL caller learns a contract the name alone
-      // can't carry
-      new ExpressionInfo(
-        classOf[SortedIntersectCount].getName, null, "graft_ixcount",
-        "graft_ixcount(a, b) - Returns |a ∩ b| for two ARRAY<BIGINT> " +
-          "columns that are SORTED ascending and duplicate-free " +
-          "(e.g. built with sort_array(collect_list(...)) over distinct " +
-          "values). On unsorted or duplicated input the fused merge " +
-          "undercounts; under the contract it equals " +
-          "size(array_intersect(a, b)) exactly.",
-        "", "", "", "array_funcs", "", "", "built-in"),
-      (children: Seq[Expression]) =>
-        SortedIntersectCount(children(0), children(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_roll64"),
-      // superset semantics in the contract string: the screen over
-      // these hashes may (very rarely) include a colliding non-equal
-      // window — exact callers re-screen candidates with a full hash
-      new ExpressionInfo(
-        classOf[RollingGramHash].getName, null, "graft_roll64",
-        "graft_roll64(ws, L) - Karp-Rabin rolling 64-bit hash of every " +
-          "L-token window of an ARRAY<STRING> (null slots hash to a " +
-          "fixed sentinel; L a " +
-          "literal >= 2): returns ARRAY<BIGINT> with size(ws)-L+1 " +
-          "entries (empty when size(ws) < L). Equal windows always " +
-          "hash equal; unequal windows collide heuristically at " +
-          "~2^-64 on non-adversarial data - a polynomial hash mod " +
-          "2^64 is NOT a universal family (structured token-hash " +
-          "differences collide far more often), so a duplicate screen " +
-          "over these hashes is a SUPERSET of the true " +
-          "duplicated-window set and callers must ALWAYS re-screen " +
-          "candidates where exactness matters, e.g. with md5 over an " +
-          "unambiguous window encoding. NOTE on the md5 re-screen: " +
-          "md5(array_join(ws, ' ')) equality is JOIN-TEXT equality, " +
-          "coarser than this function's token-exact windows when " +
-          "tokens may contain the separator or nulls (array_join " +
-          "skips nulls and conflates token boundaries) - it is exact " +
-          "only for separator-free, null-free tokens (e.g. split on " +
-          "' ' with empties filtered); otherwise join with a " +
-          "length-prefixed or unit-separator encoding first.",
-        "", "", "", "hash_funcs", "", "", "built-in"),
-      (children: Seq[Expression]) =>
-        RollingGramHash(children(0), children(1))))
+    GraftFunctions.functions.foreach(ext.injectFunction)
     ext.injectOptimizerRule(_ => graft.plans.IntervalLookupJoinRule)
     ext.injectPlannerStrategy(_ => graft.plans.IntervalJoinStrategy)
     ext.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)

@@ -256,6 +256,11 @@ object Dedup extends QueryPack {
   // ~8 bytes per token instead of a ~20-char string and intersects
   // longs (measured at the 10× replica: the string-array verify was
   // 72 s of payload shuffle for 1.25M candidates).
+  //
+  // Ownership: of the three stored frames only `pref` is itself
+  // persisted. The second and third are unpersisted PROJECTIONS of the
+  // persisted `setsNs`, so calling `unpersist()` on them silently does
+  // nothing; releasing the store must go through `setsNs` (and `pref`).
   private val ppjoinStageCache =
     scala.collection.concurrent.TrieMap
       .empty[String, (DataFrame, DataFrame, DataFrame)]

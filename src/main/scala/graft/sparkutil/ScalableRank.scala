@@ -38,10 +38,17 @@ import org.apache.spark.sql.functions._
   * leg materializes the cache, the probe leg reads it — and an evicted
   * cache block recomputes from the exchange's shuffle FILES (partition
   * index fixed), not from a re-sampled exchange, so `__pid` stays a
-  * pure function of the data. AQE never re-splits it either:
-  * `repartitionByRange` with an explicit partition count is exempt
-  * from partition coalescing. Callers must release the returned cache
-  * after their terminal action ([[materializeAndRelease]]).
+  * pure function of the data. AQE may coalesce the range exchange,
+  * but coalescing merges CONTIGUOUS partitions, so pid order still
+  * follows sort order; the persist then stamps the ids once, on the
+  * coalesced layout both legs read. Callers must release the returned
+  * cache after their terminal action ([[materializeAndRelease]]).
+  *
+  * Scale ceiling: the ids come from `monotonically_increasing_id`
+  * (pid << 33 | row index), so one range partition holds at most 2^33
+  * (~8.6e9) rows before its row index spills into the pid bits and the
+  * ranks go wrong. AQE sizes partitions to the advisory byte target,
+  * far below that row count for any real row width.
   */
 object ScalableRank {
 
@@ -65,6 +72,8 @@ object ScalableRank {
     * LongType) and the group's row count (column `totalName`, LongType)
     * within each value of `groupCol` (an Int column with FEW distinct
     * values — a metric id, a language) under the total order `order`.
+    * The output is `df`'s columns plus these two; no helper column
+    * leaks.
     * Callers must pass a TOTAL order (tie-broken by a unique key) so
     * the rank is engine-independent. The plan stays lazy — nothing
     * runs until the caller's terminal action — but the returned cache
@@ -108,7 +117,7 @@ object ScalableRank {
       .join(broadcast(offs), Seq("__g", "__pid"))
       .withColumn(rankName,
         col("__off") + (col("__mid") - col("__first")) + lit(1L))
-      .drop("__pid", "__off", "__first", "__mid")
+      .drop("__g", "__pid", "__off", "__first", "__mid")
     (ranked, staged)
   }
 

@@ -1,20 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.matchers.should.Matchers
-import org.scalatest.BeforeAndAfterAll
 
-class CosineSimSpec extends AnyFunSuite with Matchers with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]").appName("cosine-spec")
-    .config("spark.sql.shuffle.partitions", 2)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class CosineSimSpec extends SparkSuite(2) {
 
   test("bit-identical to the composable zip_with/aggregate form") {
     GraftFunctions.register(spark)
@@ -82,4 +71,21 @@ class CosineSimSpec extends AnyFunSuite with Matchers with BeforeAndAfterAll {
     codegen should include(".getDouble(")
   }
 
+  test("a one-argument call is an arity error, not IndexOutOfBounds") {
+    GraftFunctions.register(spark)
+    Seq("graft_cosine(array(1D))", "graft_qcos(array(1L))").foreach { call =>
+      val e = intercept[Exception](spark.sql(s"SELECT $call").collect())
+      withClue(call) {
+        e should not be an[IndexOutOfBoundsException]
+        e.getMessage should include("takes 2 arguments, got 1")
+      }
+    }
+  }
+
+  test("DESCRIBE FUNCTION shows the contract on the register path") {
+    GraftFunctions.register(spark)
+    val text = spark.sql("DESCRIBE FUNCTION graft_ixcount").collect()
+      .map(_.getString(0)).mkString("\n")
+    text should include("SORTED ascending and duplicate-free")
+  }
 }

@@ -30,6 +30,11 @@ class GraftExtensionsSpec extends AnyFunSuite with Matchers {
         .selectExpr("graft_cosine(a, b) AS c")
         .collect().head.getDouble(0)
       c shouldBe 1.0 +- 1e-12
+      // the injected builder checks arity like the registered one
+      val arity = intercept[Exception](
+        s2.sql("SELECT graft_cosine(array(1D))").collect())
+      arity should not be an[IndexOutOfBoundsException]
+      arity.getMessage should include("takes 2 arguments, got 1")
       // the interval-lookup rule rides the same injection — no
       // imperative install on s2, yet the join plans join-free
       val dim = Seq((0, 0.0, 5.0), (1, 5.0, 10.0))

@@ -1,10 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.matchers.should.Matchers
 
 /** graft_ixcount's contract: on sorted-ascending duplicate-free
   * ARRAY<BIGINT> inputs it equals size(array_intersect(a, b)) exactly
@@ -15,16 +12,7 @@ import org.scalatest.matchers.should.Matchers
   * codegen paths — the whole-stage pipeline exercises doGenCode, the
   * literal fold exercises eval.
   */
-class SortedIntersectCountSpec
-    extends AnyFunSuite with Matchers with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]").appName("ixcount-spec")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class SortedIntersectCountSpec extends SparkSuite(4) {
 
   private def check(pairs: Seq[(Seq[Long], Seq[Long])]): Unit = {
     GraftFunctions.register(spark)

@@ -1,11 +1,7 @@
 package graft.operators
 
-import graft.{SparkEntry, Tables}
-import org.apache.spark.sql.SparkSession
+import graft.{SparkEntry, SparkSuite, Tables}
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.matchers.should.Matchers
-import org.scalatest.BeforeAndAfterAll
 
 /** Independent checks for the threshold-free classifier evals.
   *
@@ -17,22 +13,11 @@ import org.scalatest.BeforeAndAfterAll
   * for partition totality (bins partition the held-out set) and its
   * per-bin positive rates against the same naive pair set.
   */
-class ClassifierEvalSpec extends AnyFunSuite with Matchers
-    with BeforeAndAfterAll {
+class ClassifierEvalSpec extends SparkSuite(4) {
 
   private val sf = "/root/testdata/sf0.001"
   private def haveData =
     new java.io.File(s"$sf/documents.parquet").exists
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]").appName("classifier-eval-spec")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
 
   /** Naive recomputation of the held-out (y, en_score, total_score)
     * rows: same 80/20 md5 split and token counting as the classifier

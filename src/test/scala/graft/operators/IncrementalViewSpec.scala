@@ -3,11 +3,7 @@ package graft.operators
 import java.nio.file.Files
 import java.sql.Date
 
-import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.matchers.should.Matchers
-import org.scalatest.BeforeAndAfterAll
+import graft.{SparkEntry, SparkSuite}
 
 /** Golden semantics for q_scale_mv_maintain: one order each side of the
   * 1997-01-01 base/delta cut, hand-computed on the 1e4 revenue grid.
@@ -15,17 +11,7 @@ import org.scalatest.BeforeAndAfterAll
   * sf0.01; this pins the grid arithmetic and the derived average on
   * values small enough to check by hand.
   */
-class IncrementalViewSpec extends AnyFunSuite with Matchers
-    with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]").appName("mv-maintain-spec")
-    .config("spark.sql.shuffle.partitions", 2)
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class IncrementalViewSpec extends SparkSuite(2) {
 
   test("base + delta partials merge to the hand-computed view") {
     import spark.implicits._

@@ -1,11 +1,8 @@
 package graft.sparkutil
 
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.matchers.should.Matchers
 
 /** ScalableRank replaces unpartitioned `Window.orderBy` ranks/ntiles
   * (Exchange SinglePartition at scale) in q_window_rfm and
@@ -14,16 +11,9 @@ import org.scalatest.matchers.should.Matchers
   * remainder rule (total % buckets ∈ {0, 1, buckets-1}), empty and
   * sub-bucket-count frames, duplicate sort keys (tie-broken by id),
   * multiple groups, and more shuffle partitions than rows. */
-class ScalableRankSpec extends AnyFunSuite with Matchers
-    with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]").appName("scalable-rank-spec")
-    .config("spark.sql.shuffle.partitions", 7)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class ScalableRankSpec extends SparkSuite(4,
+    // more shuffle partitions than cores or than the small frames' rows
+    "spark.sql.shuffle.partitions" -> "7") {
 
   /** Deterministic pseudo-random frame: id unique, k intentionally
     * collision-heavy so ties span range-partition boundaries. */
@@ -43,6 +33,8 @@ class ScalableRankSpec extends AnyFunSuite with Matchers
         .orderBy(col("k").desc, col("id"))).cast("long"))
       .withColumn("tot_w", count(lit(1)).over(
         Window.partitionBy("g")).cast("long"))
+    // exactly the input plus rank and total: no helper column leaks
+    ranked.columns.sorted shouldBe (df.columns :+ "r" :+ "tot").sorted
     val got =
       try ranked.select("g", "id", "r", "tot").collect()
         .map(x => (x.getInt(0), x.getLong(1)) -> (x.getLong(2), x.getLong(3)))
